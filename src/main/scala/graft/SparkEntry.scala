@@ -432,7 +432,7 @@ object SparkEntry {
 
     // ---- Imputation: categorical mode ---------------------------------------------
     "q38_impute_mode" -> ((s, dir) => {
-      Imputation.imputeMode(t(s, dir, "orders"), "o_orderpriority", col("o_orderstatus") === "P")
+      Imputation.impute(t(s, dir, "orders"), "o_orderpriority", Imputation.Mode, col("o_orderstatus") === "P")
         .select(col("o_orderkey"), col("o_orderpriority_imputed"))
     }),
 

@@ -685,19 +685,6 @@ object Dedup {
   def hashedShingles(text: Column, n: Int): Column =
     GraftFunctions.wordShingleHashes(text, n)
 
-  /** MinHash signatures: for each document, `numHashes` minima over its
-    * shingle set, computed in ONE per-row codegen'd pass
-    * ([[graft.functions.expressions.MinHashSignature]]) — no explode, no
-    * shuffle; a document's signature is produced inside its scan task.
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String, n: Int, numHashes: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
-    df.repartition(col(idCol))
-      .select(
-        col(idCol).as("id"),
-        GraftFunctions.minhash(hashedShingles(col(textCol), n), numHashes).as("sig"))
-  }
-
   /** MinHash + LSH banding: split the signature into `bands` bands of
     * r = numHashes/bands rows; documents sharing any band bucket become
     * candidate pairs; candidates are verified with exact n-gram Jaccard.

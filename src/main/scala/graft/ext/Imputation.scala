@@ -21,11 +21,10 @@ object Imputation {
   sealed trait Strategy
   case object Mean extends Strategy
   case object Median extends Strategy
-  /** Most frequent value; ties broken by smallest value (deterministic). */
+  /** Most frequent non-null value of any ordered type; ties broken by
+    * smallest value (deterministic).
+    */
   case object Mode extends Strategy
-
-  /** Constant fill — the reference's own strategy. */
-  def fillConstant(df: DataFrame, defaults: Map[String, Any]): DataFrame = df.na.fill(defaults)
 
   /** Impute `valueCol` where `missing` holds, using `strategy` computed
     * over the non-missing rows. Adds `<valueCol>_imputed`.
@@ -42,40 +41,15 @@ object Imputation {
       case Median =>
         ok.agg(median(col(valueCol)).as("__stat"))
       case Mode =>
-        ok.groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
-          .agg(max_by(col(valueCol), struct(col("__c"), negateForTiebreak(col(valueCol)))).as("__stat"))
+        // (count desc, value asc) is one struct order, exact for every type
+        ok.filter(col(valueCol).isNotNull)
+          .groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
+          .agg(min_by(col(valueCol), struct(-col("__c"), col(valueCol))).as("__stat"))
     }
     df.crossJoin(broadcast(statDf))
       .withColumn(s"${valueCol}_imputed",
         when(missing, col("__stat").cast(df.schema(valueCol).dataType)).otherwise(col(valueCol)))
       .drop("__stat")
-  }
-
-  /** Mode tie-break helper: max_by(value, (count, tb)) must pick the
-    * SMALLEST value among equal counts. For numeric columns we negate; for
-    * strings we invert byte-wise via a rank join — kept simple here by
-    * supporting numeric negate and falling back to a two-pass argmin for
-    * other types (see modeOf).
-    */
-  private def negateForTiebreak(c: Column): Column = -c.cast("double")
-
-  /** Mode of any column type: highest count, ties → smallest value.
-    * Two nested aggregations, both reducing to one row.
-    */
-  def modeOf(df: DataFrame, valueCol: String): DataFrame = {
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
-    val maxC = counts.agg(max(col("__c")).as("__mc"))
-    counts.join(broadcast(maxC), col("__c") === col("__mc"))
-      .agg(min(col(valueCol)).as("mode"))
-  }
-
-  /** Categorical imputation with the global mode (ties → smallest). */
-  def imputeMode(df: DataFrame, valueCol: String, missing: Column): DataFrame = {
-    val m = modeOf(df.filter(!missing), valueCol)
-    df.crossJoin(broadcast(m))
-      .withColumn(s"${valueCol}_imputed", when(missing, col("mode")).otherwise(col(valueCol)))
-      .drop("mode")
   }
 
   /** MLlib bridge: the same mean/median imputation via

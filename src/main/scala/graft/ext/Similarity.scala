@@ -73,15 +73,6 @@ object Similarity {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Sign-bit LSH bucket key from `numPlanes` deterministic pseudo-random
-    * hyperplanes (components derived from xxhash64(plane, index) — no RNG
-    * state, reproducible on any cluster). Vectors in the same bucket are
-    * likely neighbors (angular LSH). One native codegen'd pass
-    * ([[graft.functions.expressions.LshSignBuckets]]).
-    */
-  def lshBucket(vec: Column, numPlanes: Int): Column =
-    element_at(GraftFunctions.lshSignBuckets(vec, numPlanes, 1), 1)
-
   /** Explode a frame into one row per (LSH table, bucket) membership —
     * the shared candidate-generation front end of [[lshTopK]] and
     * [[cosineNearDupPairsBucketed]]. All `tables` buckets come from ONE

@@ -34,8 +34,9 @@ object Upsert {
       path: String,
       keys: Seq[String],
       partitionCol: Option[String] = None): Long = {
+    val exists = tableExists(spark, path)
     val fresh =
-      if (!tableExists(spark, path)) incoming
+      if (!exists) incoming
       else Joins.antiByKey(incoming, spark.read.parquet(path), keys)
     // The delta must be FULLY materialized before the append starts: the
     // anti-join plan reads the same parquet path the append writes into, so
@@ -52,7 +53,7 @@ object Upsert {
         // if the target carries a zone-map manifest, keep it fresh —
         // O(|appended files|), no-op (one metadata call) otherwise
         graft.sources.Tables.maintainManifest(spark, path): Unit
-      } else if (!tableExists(spark, path)) {
+      } else if (!exists) {
         // create-if-absent even when the first batch is empty (K1)
         val w = materialized.write.mode("append")
         partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)

@@ -26,8 +26,14 @@ object Pipelines {
     * ranged extract (S3/S4) → derive columns (P2, F1-F3) → dim joins
     * (J1/J4 inner ⇒ silently drops facts without an active supplier) →
     * contains-match lookup (J7, first match by dim order) → null defaults
-    * (F11) → summarize (A2) → incremental anti-join merge (J6/K2) against
-    * the previously-loaded window.
+    * (F11) → summarize (A2). One plan over one ranged scan of `lineitem`,
+    * with `supplier` and `part` each read once.
+    *
+    * The incremental merge (J6/K2) is the sink's: [[loadImputations]]
+    * anti-joins this batch against the loaded fact, so a replayed window
+    * appends nothing. `loadedFrom` is validated (F5) but plans nothing —
+    * every row here has `fecha >= from`, so no key of the previously loaded
+    * window `[loadedFrom, from)` can match one.
     */
   def imputations(
       spark: SparkSession,
@@ -39,39 +45,32 @@ object Pipelines {
     // reference's 400 response ([function_app.py:31-50]).
     Params.parseDateRange(from, to)
     Params.parseDate("loadedFrom", loadedFrom)
-    val staged = Relational.rangedScan(
-      Tables.lineitem(spark, sfDir), "l_shipdate", from, to)
-    def transform(src: DataFrame): DataFrame = {
-      val derived = src
-        .withColumn("fecha", Fns.toDateCol(col("l_shipdate")))
-        .withColumn("horas", col("l_quantity").cast("double"))
-      // J4: inner join ⇒ rows without an in-good-standing supplier are
-      // silently dropped, matching the reference's DNI resolve semantics.
-      val employees = Tables.supplier(spark, sfDir)
-        .filter(col("s_acctbal") > 0)
-        .select(col("s_suppkey"), col("s_name"))
-      val withEmp = Joins.enrich(derived, employees,
-        derived("l_suppkey") === employees("s_suppkey"))
-      // task text via part (J1, broadcast dim)
-      val parts = Tables.part(spark, sfDir).select(col("p_partkey"), col("p_name"))
-      val withTask = Joins.enrich(withEmp, parts,
-        withEmp("l_partkey") === parts("p_partkey"))
-      // J7: first p_type (dim order = p_type asc) contained in the task text
-      val typeDim = Tables.part(spark, sfDir).select(col("p_type")).distinct()
-      val looked = Joins.containsLookup(
+    val derived = Relational.rangedScan(
+        Tables.lineitem(spark, sfDir), "l_shipdate", from, to)
+      .withColumn("fecha", Fns.toDateCol(col("l_shipdate")))
+      .withColumn("horas", col("l_quantity").cast("double"))
+    // J4: inner join ⇒ rows without an in-good-standing supplier are
+    // silently dropped, matching the reference's DNI resolve semantics.
+    val employees = Tables.supplier(spark, sfDir)
+      .filter(col("s_acctbal") > 0)
+      .select(col("s_suppkey"), col("s_name"))
+    val withEmp = Joins.enrich(derived, employees,
+      derived("l_suppkey") === employees("s_suppkey"))
+    // task text via part (J1, broadcast dim)
+    val part = Tables.part(spark, sfDir)
+    val parts = part.select(col("p_partkey"), col("p_name"))
+    val withTask = Joins.enrich(withEmp, parts,
+      withEmp("l_partkey") === parts("p_partkey"))
+    // J7: first p_type (dim order = p_type asc) contained in the task text
+    val typeDim = part.select(col("p_type")).distinct()
+    Joins.containsLookup(
         withTask, typeDim, "p_name", "p_type", "p_type", "p_type", "tipo")
-      val defaulted = looked.na.fill(Map("tipo" -> "No asignado"))
-      defaulted
-        .groupBy(col("s_suppkey"), col("fecha"), col("tipo"))
-        .agg(
-          Fns.dsum(col("horas")).as("horas"),
-          min(col("l_extendedprice")).as("precio_min"),
-          count(lit(1)).as("n_lineas"))
-    }
-    val incoming = transform(staged)
-    val existing = transform(Relational.rangedScan(
-      Tables.lineitem(spark, sfDir), "l_shipdate", loadedFrom, from))
-    Joins.antiByKey(incoming, existing, Seq("s_suppkey", "fecha", "tipo"))
+      .na.fill(Map("tipo" -> "No asignado"))
+      .groupBy(col("s_suppkey"), col("fecha"), col("tipo"))
+      .agg(
+        Fns.dsum(col("horas")).as("horas"),
+        min(col("l_extendedprice")).as("precio_min"),
+        count(lit(1)).as("n_lineas"))
   }
 
   /** Fichajes (clock-ins) flow ([function_app.py:318-388]):
@@ -97,7 +96,9 @@ object Pipelines {
 
   /** Idempotent incremental load of the imputations fact to parquet —
     * the K1/K2 sink form ([function_app.py:291-315]): create-if-absent,
-    * then append only rows whose business key is new.
+    * then append only rows whose business key is new. The sink's anti-join
+    * against the target is the J6 step, so overlapping or replayed windows
+    * never duplicate a `(s_suppkey, fecha, tipo)` key.
     */
   def loadImputations(
       spark: SparkSession, sfDir: String, from: String, to: String,

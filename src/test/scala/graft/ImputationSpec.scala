@@ -23,9 +23,29 @@ class ImputationSpec extends SparkTestBase {
 
   test("mode imputation breaks ties by smallest value") {
     val d = Seq((1, "?"), (2, "b"), (3, "a"), (4, "b"), (5, "a")).toDF("id", "x")
-    val got = Imputation.imputeMode(d, "x", col("x") === "?")
+    val got = Imputation.impute(d, "x", Imputation.Mode, col("x") === "?")
       .select("id", "x_imputed").as[(Int, String)].collect().toMap
     assert(got(1) == "a") // a and b both occur twice; smallest wins
+  }
+
+  test("mode tie between longs above 2^53 picks the smallest in either input order") {
+    val big = 1L << 53 // big and big + 1 collapse to one double
+    for (vals <- Seq(Seq(big + 1, big, big + 1, big), Seq(big, big + 1, big, big + 1))) {
+      val d = ((1, -1L) +: vals.zipWithIndex.map { case (v, i) => (i + 2, v) }).toDF("id", "x")
+      val got = Imputation.impute(d, "x", Imputation.Mode, col("x") < 0)
+        .select("id", "x_imputed").as[(Int, Long)].collect().toMap
+      assert(got(1) == big, s"input order $vals")
+    }
+  }
+
+  test("mode never counts null as a candidate value") {
+    // <=> keeps the null rows on the non-missing side; null is the most
+    // frequent value there but must not become the fill
+    val d = Seq((1, Some("?")), (2, None), (3, None), (4, None), (5, Some("b")), (6, Some("a")),
+      (7, Some("a"))).toDF("id", "x")
+    val got = Imputation.impute(d, "x", Imputation.Mode, col("x") <=> lit("?"))
+      .select("id", "x_imputed").as[(Int, Option[String])].collect().toMap
+    assert(got(1).contains("a") && got(2).isEmpty)
   }
 
   test("mlImpute (spark.ml bridge) fills nulls with the mean") {
