@@ -3320,7 +3320,7 @@ object SparkEntry {
       // the checkpoints each side's whole pipeline executes twice in the
       // one returned action (rows identical either way)
       val fromIndex = Dedup.componentsTable(s, idx).localCheckpoint()
-      val rawDups = s.read.parquet(s"$idx/comps")
+      val rawDups = Dedup.readComps(s, idx) // base ∪ delta
         .groupBy(col("id")).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1)
         .select(col("id"), col("n").as("rep"))
@@ -6630,20 +6630,20 @@ object SparkEntry {
       s"""tm$i AS (SELECT id, CAST(FLOOR(CAST(rm AS DOUBLE) / outdeg + 0.5) AS BIGINT) AS term FROM r${i - 1}),
       c$i AS (SELECT e.dst AS id, SUM(tm$i.term) AS contrib
               FROM e JOIN tm$i ON e.src = tm$i.id GROUP BY e.dst),
-      r$i AS (SELECT p.id, p.outdeg,
+      r$i AS MATERIALIZED (SELECT p.id, p.outdeg,
                 CAST(FLOOR(0.15 * 1e6 / nn.n + 0.5) AS BIGINT)
                   + CAST(FLOOR(0.85 * COALESCE(c$i.contrib, 0) + 0.5) AS BIGINT) AS rm
               FROM r${i - 1} p LEFT JOIN c$i ON p.id = c$i.id, nn)"""
     }.mkString(",\n      ")
     s"""
-      WITH t AS (SELECT doc_id, $fp AS fp FROM documents),
+      WITH t AS MATERIALIZED (SELECT doc_id, $fp AS fp FROM documents),
       g AS (SELECT fp FROM t GROUP BY fp HAVING count(*) >= 2),
-      nd AS (SELECT t.doc_id AS id, t.fp FROM t JOIN g USING (fp)),
-      e AS (SELECT a.id AS src, b.id AS dst
+      nd AS MATERIALIZED (SELECT t.doc_id AS id, t.fp FROM t JOIN g USING (fp)),
+      e AS MATERIALIZED (SELECT a.id AS src, b.id AS dst
             FROM nd a JOIN nd b ON a.fp = b.fp AND a.id <> b.id),
-      dg AS (SELECT src AS id, count(*) AS outdeg FROM e GROUP BY src),
-      nn AS (SELECT count(*) AS n FROM dg),
-      r0 AS (SELECT dg.id, dg.outdeg,
+      dg AS MATERIALIZED (SELECT src AS id, count(*) AS outdeg FROM e GROUP BY src),
+      nn AS MATERIALIZED (SELECT count(*) AS n FROM dg),
+      r0 AS MATERIALIZED (SELECT dg.id, dg.outdeg,
              CAST(FLOOR(1e6 / nn.n + 0.5) AS BIGINT) AS rm FROM dg, nn),
       $iterCtes
       SELECT id AS doc_id, rm AS rank_micro,

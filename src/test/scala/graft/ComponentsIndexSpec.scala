@@ -192,9 +192,10 @@ class ComponentsIndexSpec extends SparkTestBase {
     val one = Seq((5L, 0x0F0F0F0FL)).toDF("id", "sig")
     Dedup.componentsIngest(spark, one, idx) // default dispatch
     Dedup.componentsIngest(spark, one, idx) // replayed crawl batch
-    // maintenance APPENDS per replay (tolerated dups, folded at read);
-    // the recompute route would have swapped to one raw row per id
-    val raw = spark.read.parquet(s"$idx/comps").filter(col("id") === 5L)
+    // maintenance APPENDS per replay (tolerated dups in the comps delta,
+    // folded at read); the recompute route would have swapped to one raw
+    // row per id
+    val raw = Dedup.readComps(spark, idx).filter(col("id") === 5L)
     assert(raw.count() == 2L,
       "crawl-cadence ingest must take the maintenance route (append), not the swap")
     assert(Dedup.componentsTable(spark, idx).count() == 201L)

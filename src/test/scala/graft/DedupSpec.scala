@@ -221,12 +221,13 @@ class DedupSpec extends SparkTestBase {
     Dedup.buildSignatureIndex(sig.filter(pmod(col("id"), lit(4)) === 0), dir2)
     Dedup.signatureIndexIngest(spark, dir2, sig.filter(pmod(col("id"), lit(4)) === 2))
     assert(rows(Dedup.signatureIndexProbe(spark, dir2, odd)) == rows(direct))
-    // replayed ingest appends duplicate rows; compact removes them and
-    // the probe is row-identical
+    // replayed ingest appends duplicate rows (to the delta, read with the
+    // base); compact removes them and the probe is row-identical
     Dedup.signatureIndexIngest(spark, dir2, sig.filter(pmod(col("id"), lit(4)) === 2))
-    val distinctRows = spark.read.parquet(s"$dir2/sigs").distinct().count()
-    assert(spark.read.parquet(s"$dir2/sigs").count() > distinctRows)
+    val distinctRows = Dedup.readSigs(spark, dir2).distinct().count()
+    assert(Dedup.readSigs(spark, dir2).count() > distinctRows)
     Dedup.signatureIndexCompact(spark, dir2)
+    assert(Dedup.readSigs(spark, dir2).count() == distinctRows)
     assert(spark.read.parquet(s"$dir2/sigs").count() == distinctRows)
     assert(rows(Dedup.signatureIndexProbe(spark, dir2, odd)) == rows(direct))
   }
@@ -460,6 +461,21 @@ class DedupSpec extends SparkTestBase {
         finally spark.conf.unset("spark.graft.cc.driverEdgeRows")
       assert(got === driver, s"cap=$cap diverged")
     }
+  }
+
+  test("connectedComponents: duplicate node ids give the same rows on both routes") {
+    // touched ids 3 and 42 and isolated id 50 appear more than once in
+    // the node frame: the driver route must not leave an earlier copy of
+    // a touched id as a singleton labelled with itself
+    val nodes = ((1L to 10L) ++ Seq(3L, 3L, 7L, 42L, 42L, 50L, 50L)).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (42L, 99L)).toDF("id_a", "id_b")
+    def labels() = Dedup.connectedComponents(nodes, "id", pairs)
+      .as[(Long, Long)].collect().toSeq.sorted
+    val driver = labels()
+    spark.conf.set("spark.graft.cc.driverEdgeRows", "0")
+    val dist = try labels() finally spark.conf.unset("spark.graft.cc.driverEdgeRows")
+    assert(driver === dist)
+    assert(driver.count(_ == (3L, 1L)) == 1 && driver.count(_ == (50L, 50L)) == 2)
   }
 
   test("connectedComponents converges on a chain far longer than maxIter") {

@@ -398,8 +398,9 @@ class StreamsSpec extends SparkTestBase {
       q.processAllAvailable()
       assert(spark.read.parquet(s"$dir/t")
         .select("media_id").as[Long].collect().toSet == Set(1L, 2L, 4L))
-      // the index holds exactly the accepted signatures (4 chunk rows each)
-      assert(spark.read.parquet(s"$dir/idx/sigs")
+      // the index (base plus appended delta) holds exactly the accepted
+      // signatures (4 chunk rows each)
+      assert(graft.ext.Dedup.readSigs(spark, s"$dir/idx")
         .select("id").distinct().as[Long].collect().toSet == Set(1L, 2L, 4L))
     } finally q.stop()
   }

@@ -5,7 +5,7 @@
 # scale-dependent divergences that the single-SF gate missed — run this
 # at every round close, not just sf0.01.
 # Usage: tools/gate_all.sh [outRoot]   (default /tmp/gate_r)
-set -e
+set -e -o pipefail
 OUT=${1:-/tmp/gate_r}
 for SF in 0.001 0.01 0.1; do
   echo "=== sf$SF ==="
